@@ -118,8 +118,8 @@ def main():
     # on-disk store (outside the timers): q_wand_driver_* serve through
     # the driver skip-data plan (PLANS.md §"Driver skip-data WAND" — zero
     # Spark jobs per query once metadata is warm), the plan a searcher
-    # node would run in production. The in-memory q_wand_* rows keep the
-    # cluster-side flow benched for coverage.
+    # node would run in production. The in-memory q_wand_* rows bench the
+    # fused cluster-side kernel.
     store_dir = os.path.join(tempfile.mkdtemp(prefix="nexlt_bench_"), "store")
     save_blocked(bidx, store_dir)
     save_doc_attrs(documents, store_dir)  # fq sidecar (query/attrs.py)

@@ -19,9 +19,10 @@ doc_ids via pyarrow with doc_id-stat row-group pruning:
   filter-passing docs BEFORE taking the k-th, so θ lower-bounds the
   true filtered k-th exact score (fewer survivors ⇒ θ only drops ⇒
   kept-block masks only widen);
-- every cluster-side route (exact fallback, legacy WAND flow, in-memory
-  stores) still works: the sidecar reads back as a DataFrame and
-  `filter_documents` applies the same clauses (to_doc_filter_df).
+- every cluster-side route (exact fallback, the driver plan's Spark
+  steps on in-memory stores) still works: the sidecar reads back as a
+  DataFrame and `filter_documents` applies the same clauses
+  (to_doc_filter_df).
 
 At 10^12 docs the sidecar is a range-partitioned skinny table (~30 B/
 doc); a candidate set of ≤5·10^5 ids touches the row groups its

@@ -31,22 +31,17 @@ medians. Mispredictions are bounded: both floors sit within ~0.4 s of
 each other at small stores, and the fallback guards catch the only
 shapes that lose big (kept postings past the candidate cap).
 
-**Cluster-side flow** (in-memory index, or a head term whose skip data
-exceeds the driver cap): on a RANGED store this is the r4 fused one-job
-kernel — same single exchange as the exact plan, overhead = one probe
-decode, so WAND routes whenever pruning beats a probe's volume. On
-non-ranged stores the legacy multi-job flow still pays ~1.2-1.5 s of
-orchestration, so exact wins unless pruning skips tens of millions of
-postings; there, route to WAND iff
+**Fused cluster kernel** (ranged store whose payloads are not driver-
+readable, or a head term whose skip data exceeds the driver cap): the r4
+one-job kernel — same single exchange as the exact plan, overhead = one
+probe decode, so WAND routes whenever the estimated pruning saves more
+postings than a probe decodes. Every other non-driver query (a non-
+ranged store, or any doc_filter) goes exact. The saved-volume
+estimate uses CACHED collection statistics only — the (df, max_tfnorm,
+n_blocks, block-ub quantile sketch) per term that query.wand._term_meta
+memoizes (one metadata-only Spark job per new term, the Lucene
+TermStates analog):
 
-    est_postings_saved / DECODE_RATE > WAND_OVERHEAD_SEC
-
-from CACHED collection statistics only — the (df, max_tfnorm, n_blocks,
-block-ub quantile sketch) per term that query.wand._term_meta memoizes
-(one metadata-only Spark job per new term, the Lucene TermStates
-analog).
-
-Legacy saved-volume estimate:
 - OR: θ̂ = THETA_FRACTION · Σ_t gm_t (the co-occurrence bound); a block
   of term t survives iff ub ≥ θ̂ − Σ_{t'≠t} gm_{t'}; stepping that cut
   through the cached block-ub quantile sketch yields a kept-block
@@ -61,7 +56,6 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -84,16 +78,6 @@ from nexlt_spark.query.wand import (
 from nexlt_spark.scoring import idf
 
 THETA_FRACTION = 0.8
-# legacy-flow constants, calibrated on tools/bench_wand_crossover.py
-# (BENCH.md §6): the fused kernel decodes+folds ~20M postings/s
-# end-to-end through one Spark job, and the cluster-side WAND flow's
-# extra driver round-trips cost ~1 s over the exact plan's single job.
-# Engine/cluster constants, not data constants — override per deployment
-# if the crossover bench says otherwise there.
-DECODE_RATE_POSTINGS_PER_SEC = 20_000_000
-WAND_OVERHEAD_SEC = 1.0
-# the volume WAND must skip to pay for its orchestration
-BREAK_EVEN_POSTINGS = int(DECODE_RATE_POSTINGS_PER_SEC * WAND_OVERHEAD_SEC)
 
 # driver-skip-data-plan constants, calibrated from the v6 crossover at an
 # 18M-doc Zipf store (BENCH.md §6): non-fallback driver WAND medians
@@ -229,11 +213,8 @@ def choose_topk_path(
     fill; on pyarrow-backed stores planning is pure driver-side reads.
 
     has_doc_filter: wand_topk only takes the fused one-job ranged kernel
-    when doc_filter is None — with a filter, a ranged store routes 'wand'
-    into the legacy candidate-collect flow, so the candidate-cap guards
-    must apply exactly as on a non-ranged store (ADVICE r4: skipping them
-    sent over-cap filtered queries through a collect that always fell
-    back to exact — correct but wasted work)."""
+    when doc_filter is None — a filtered query off the driver plan is
+    served by the exact plan, so it routes 'exact' here too."""
     qterms = sorted(set(terms))
     meta = _term_meta(bidx, qterms)
     if not meta:
@@ -263,24 +244,19 @@ def choose_topk_path(
         meta[t][2] <= SKIP_CACHE_MAX_BLOCKS for t in meta
     ):
         return _choose_driver_plan(bidx, meta, sorted(meta), k, mode)
-    fused_route = getattr(bidx, "ranged", False) and not has_doc_filter
-    if mode == "and" and not fused_route:
-        rare_df = min(m[0] for m in meta.values())
-        if rare_df > DEFAULT_CANDIDATE_CAP:
-            return "exact"  # candidate collect would overflow → fallback anyway
+    if not getattr(bidx, "ranged", False) or has_doc_filter:
+        return "exact"  # wand_topk would serve it with the exact plan
     saved = estimate_postings_saved(bidx, terms, mode)
     if saved is None:
         return "exact"
-    if fused_route:
-        # r4: cluster-side WAND on a ranged store is the FUSED one-job
-        # kernel (query.wand._wand_topk_ranged_fused) — the same single
-        # groupBy(rsalt) exchange as the exact per-range plan, no
-        # candidate collect (so no cap), no multi-job floor. The only
-        # overhead over exact is the in-kernel θ probe decode, so route
-        # WAND whenever estimated pruning outweighs a probe's volume.
-        probe_cost = PROBE_BLOCKS_PER_TERM * BLOCK_SIZE * len(meta)
-        return "wand" if saved > probe_cost else "exact"
-    return "wand" if saved > BREAK_EVEN_POSTINGS else "exact"
+    # r4: cluster-side WAND on a ranged store is the FUSED one-job kernel
+    # (query.wand._wand_topk_ranged_fused) — the same single groupBy(rsalt)
+    # exchange as the exact per-range plan, no candidate collect (so no
+    # cap), no multi-job floor. The only overhead over exact is the
+    # in-kernel θ probe decode, so route WAND whenever estimated pruning
+    # outweighs a probe's volume.
+    probe_cost = PROBE_BLOCKS_PER_TERM * BLOCK_SIZE * len(meta)
+    return "wand" if saved > probe_cost else "exact"
 
 
 def _normalize_filter(doc_filter):

@@ -47,10 +47,14 @@ rows (`first_doc_id IN (...)` pushed to the scan, or a broadcast
 semi-join above the literal cap): OR = 3 small jobs (probe decode,
 candidate decode, rescore), AND = 2 (rare-list decode, rescore), and a
 guaranteed cap overflow falls back BEFORE any candidate job runs.
-Terms whose block count exceeds SKIP_CACHE_MAX_BLOCKS (the 10^12-doc
-head-term case: billions of blocks can't sit on one driver) route the
-whole query through the legacy Spark-side pruning flow below, whose
-pruning runs as cluster-side filters instead.
+
+**Cluster-side WAND** is the fused per-range kernel
+(`_wand_topk_ranged_fused`): on a ranged store, a query whose terms
+exceed SKIP_CACHE_MAX_BLOCKS (the 10^12-doc head-term case: billions of
+blocks can't sit on one driver) or whose payloads are not driver-
+readable runs the whole WAND inside one grouped pass per doc range. An
+over-cap query the fused kernel cannot take (a non-ranged store, or a
+DataFrame doc_filter) takes the exact plan.
 """
 
 from __future__ import annotations
@@ -74,7 +78,8 @@ DEFAULT_SLICE_SHIFT = 12  # candidate-range granularity: 4096 docIDs
 PROBE_BLOCKS_PER_TERM = 16
 # per-term driver skip-data cap: 1M blocks ≈ 4×8 B arrays = 32 MB/term,
 # covering ~128M postings/term. Above it (true head terms at 10^10+ docs)
-# the legacy Spark-side pruning flow serves the query.
+# a ranged store serves the query with the fused per-range kernel; any
+# other store takes the exact plan.
 SKIP_CACHE_MAX_BLOCKS = 1_000_000
 # byte budgets for the driver's positive metadata caches (VERDICT r4
 # "what's wrong" #1: these were count/vocab-bounded and could grow a
@@ -217,8 +222,8 @@ def _pa_ds(bidx: BlockedIndex):
     lpath = local_path(path)
     if lpath is None:
         # remote stores (s3a://, hdfs://): pyarrow.dataset can't open the
-        # URI directly — return None so callers fall back to the Spark
-        # cluster flow instead of crashing the query
+        # URI directly — return None so callers fall back to Spark
+        # reads instead of crashing the query
         return None
     dset = getattr(bidx, "_pa_dataset", None)
     if dset is None:
@@ -240,6 +245,35 @@ def _pa_term_filter(bidx: BlockedIndex, term: str):
     return e
 
 
+_META_INIT_LOCK = threading.Lock()
+
+
+def _meta_caches(bidx: BlockedIndex):
+    """(positive ByteLRU, negative FIFO, the FIFO's lock) for the index,
+    created on first touch under one module-level lock. Concurrent
+    searcher threads would otherwise each build their own FIFO or lock
+    and lose negatives to whichever attribute write lands last. A reset
+    FIFO (``_term_meta_negs = None``) is rebuilt with a fresh lock."""
+    negs = getattr(bidx, "_term_meta_negs", None)
+    cache = getattr(bidx, "_term_meta_cache", None)
+    if negs is None or cache is None:
+        with _META_INIT_LOCK:
+            cache = getattr(bidx, "_term_meta_cache", None)
+            if cache is None:
+                cache = ByteLRU(lambda: _META_CACHE_MAX_BYTES)
+                bidx._term_meta_cache = cache
+            negs = getattr(bidx, "_term_meta_negs", None)
+            if negs is None:
+                from collections import OrderedDict
+
+                # lock first: a reader that sees the new FIFO also sees
+                # the lock that guards it
+                bidx._term_meta_negs_lock = threading.Lock()
+                negs = OrderedDict()  # FIFO of term-absent entries only
+                bidx._term_meta_negs = negs
+    return cache, negs, bidx._term_meta_negs_lock
+
+
 def _term_meta(bidx: BlockedIndex, qterms: List[str]) -> dict:
     """(df, max_tfnorm, n_blocks, tfnorm_quantiles) per present query
     term — ONE metadata-only job for cache misses, memoized on the index
@@ -254,18 +288,7 @@ def _term_meta(bidx: BlockedIndex, qterms: List[str]) -> dict:
     feeds the driver-side WAND-vs-exact planner (query.planner) with an
     estimate of how many blocks a θ cut would keep — no postings touched.
     """
-    cache = getattr(bidx, "_term_meta_cache", None)
-    if cache is None:
-        cache = ByteLRU(lambda: _META_CACHE_MAX_BYTES)
-        bidx._term_meta_cache = cache
-    negs = getattr(bidx, "_term_meta_negs", None)
-    if negs is None:
-        from collections import OrderedDict
-
-        negs = OrderedDict()  # FIFO of term-absent entries only
-        bidx._term_meta_negs = negs
-        bidx._term_meta_negs_lock = threading.Lock()
-    negs_lock = getattr(bidx, "_term_meta_negs_lock", None) or threading.Lock()
+    cache, negs, negs_lock = _meta_caches(bidx)
 
     def _note_negative(term: str) -> None:
         # O(1) bounded negative cache: insert, evict oldest past the cap.
@@ -433,9 +456,10 @@ def maxscore_split(present: List[str], gm: Dict[str, float], theta: float) -> se
     candidate discovery needs only the essential terms' kept blocks; the
     rescore still folds non-essential contributions exactly. The
     largest-gm term is always essential. ONE definition shared by the
-    driver flow, the cluster flow, and the planner's rehearsal — the
-    planner's 'rehearses the execution exactly' claim and the split's
-    rank-safety both require the three callers to agree."""
+    driver flow, the fused per-range kernel, and the planner's
+    rehearsal — the planner's 'rehearses the execution exactly' claim
+    and the split's rank-safety both require the three callers to
+    agree."""
     by_gm = sorted(present, key=lambda t: gm[t])
     non_essential: set = set()
     prefix = 0.0
@@ -791,77 +815,40 @@ def _xxh64(data: bytes, seed: int) -> int:
     return signed
 
 
-MAX_JVM_SLICE_FILTER = 4096
-
-
-def _slice_prefilter(blocks: DataFrame, cand_ids: np.ndarray, slice_shift: int) -> DataFrame:
-    """JVM-side skip-list jump for the LEGACY flow (no driver skip data):
-    drop block rows whose [first,last] docID range intersects no
-    candidate slice BEFORE the payload bytes cross the Arrow hop. An
-    F.exists over the slice-id array literal — O(rows × n_slices) JVM
-    lambda evals, so gated to ≤ MAX_JVM_SLICE_FILTER slices; the driver
-    flow replaces this with exact per-block selection from skip data."""
-    slices = np.unique(cand_ids >> np.int64(slice_shift))
-    if slices.size == 0 or slices.size > MAX_JVM_SLICE_FILTER:
-        return blocks
-    arr = F.array(*[F.lit(int(s)) for s in slices.tolist()])
-    lo = F.shiftright(F.col("first_doc_id"), slice_shift)
-    hi = F.shiftright(F.col("last_doc_id"), slice_shift)
-    return blocks.where(F.exists(arr, lambda s: (s >= lo) & (s <= hi)))
-
-
-def _est_covered_fraction(n_docs: int, n_cand: int, slice_shift: int) -> float:
-    """Upper-bound estimate of the docID-space fraction candidate slices
-    cover — the driver-side signal for how much the rescore's skip-list
-    jump will actually skip."""
-    if n_docs <= 0:
-        return 1.0
-    return min(1.0, (n_cand << slice_shift) / float(n_docs))
-
-
-# when candidate slices cover less than this fraction of the docID space,
-# the rescore takes the shuffle-free rows path (decode+mask in place via
-# mapInPandas; only masked posting rows — ≤ |candidates|·|terms| — reach
-# the fold's exchange). Above it, most blocks decode anyway and the
-# per-range kernel (one payload exchange, fold fused) is the better plan.
+# when the candidate-hit blocks hold less than this fraction of the query
+# terms' postings, the rescore takes the shuffle-free rows path (decode+
+# mask in place via mapInPandas; only masked posting rows — ≤
+# |candidates|·|terms| — reach the fold's exchange). Above it, most blocks
+# decode anyway and the per-range kernel (one payload exchange, fold
+# fused) is the better plan.
 ROWS_RESCORE_COVERAGE = 0.3
 
 
 def _rescore(
-    bidx, blocks_q, present, idfs, avgdl, n_required, bc, slice_shift,
-    covered: float = 1.0, rescore: str = "auto",
-    rescore_keys: Optional[Dict[str, np.ndarray]] = None,
+    blocks_q, present, idfs, avgdl, n_required, bc, slice_shift, plan,
+    rescore_keys: Dict[str, np.ndarray],
 ):
-    """Candidate-restricted exact rescore — two plans, chosen by the
-    estimated slice coverage:
+    """Candidate-restricted exact rescore on the cluster, for rescores
+    past the driver-decode caps — two plans:
 
-    - **rows** (sparse candidates, the WAND design case at scale): decode
-      + skip + mask happen inside mapInPandas on the scan — NO shuffle of
-      block payloads; the fold's groupBy exchanges only the masked
-      posting rows. Cost scales with candidate volume, not corpus size
-      (the §6 crossover's requirement). With driver skip data
-      (rescore_keys) the scan itself reads only the exact intersecting
-      blocks — key-pushed selection, no JVM lambda prefilter.
-    - **ranged kernel** (dense candidates on a ranged store): one
-      groupBy(rsalt) exchange of block payloads, decode+mask+fold fused
-      per range (query.ranged.score_ranged_masked) — cheaper than
-      shuffling ~every decoded posting row when the mask keeps most.
+    - **rows** (sparse candidates, the WAND design case at scale): the
+      scan reads only the key-selected intersecting blocks; decode + mask
+      happen inside mapInPandas — NO shuffle of block payloads; the
+      fold's groupBy exchanges only the masked posting rows. Cost scales
+      with candidate volume, not corpus size (the §6 crossover's
+      requirement).
+    - **ranged** (dense candidates on a ranged store): one groupBy(rsalt)
+      exchange of block payloads, decode+mask+fold fused per range
+      (query.ranged.score_ranged_masked) — cheaper than shuffling ~every
+      decoded posting row when the mask keeps most.
     """
-    use_ranged = (
-        getattr(bidx, "ranged", False)
-        and rescore != "rows"
-        and (rescore == "ranged" or covered >= ROWS_RESCORE_COVERAGE)
-    )
-    if use_ranged:
+    if plan == "ranged":
         from nexlt_spark.query.ranged import score_ranged_masked
 
         return score_ranged_masked(
             blocks_q, present, idfs, avgdl, n_required, bc, slice_shift
         )
-    if rescore_keys is not None:
-        pruned = _select_blocks_by_keys(blocks_q, rescore_keys)
-    else:
-        pruned = _slice_prefilter(blocks_q, bc.value, slice_shift)
+    pruned = _select_blocks_by_keys(blocks_q, rescore_keys)
     rows = _decode_filtered(pruned, bc, slice_shift)
     return fold_scores(rows, idfs, avgdl, n_required)
 
@@ -873,26 +860,22 @@ def wand_topk(
     mode: str = "or",
     doc_filter: Optional[DataFrame] = None,
     candidate_cap: int = DEFAULT_CANDIDATE_CAP,
-    slice_shift: Optional[int] = None,
     stats_out: Optional[dict] = None,
-    rescore: str = "auto",
-    skip_cache: bool = True,
     boosts: Optional[dict] = None,
     as_rows: bool = False,
 ) -> DataFrame:
     """(doc_id, score) top-k via Block-Max WAND; ≡ exact path ranks+scores.
 
-    skip_cache=True (default) serves the query from driver-resident skip
-    data when every present term's block count fits the cache cap —
-    block selection/pruning/fallback decisions are then driver-side numpy
-    and each Spark job reads only key-selected blocks. skip_cache=False
-    (or an over-cap term) routes through the legacy cluster-side pruning
-    flow. slice_shift=None (default) sizes the rescore's skip-list
-    granularity to the collected candidate count (_adaptive_slice_shift);
-    pass an int to pin it. stats_out, when given, is filled with pruning
-    telemetry (theta, blocks_total, blocks_kept, n_candidates,
-    slice_shift, fallback, plan) — free on the driver plan (no extra
-    Spark jobs).
+    Three routes (module docstring): the driver skip-data plan when every
+    present term's block count fits SKIP_CACHE_MAX_BLOCKS — block
+    selection/pruning/fallback decisions are then driver-side numpy and
+    each Spark job reads only key-selected blocks; the fused per-range
+    kernel on a ranged store whose payloads are not driver-readable or
+    whose terms are over the cap; the exact plan for anything else.
+    stats_out, when given, is filled with the route (plan, spark_plan)
+    and pruning telemetry (theta, blocks_total, blocks_kept,
+    n_candidates, slice_shift, fallback, rescore_plan) — free on the
+    driver plan (no extra Spark jobs).
 
     as_rows=True returns a plain ``[(doc_id, score), ...]`` list (the
     Lucene TopDocs shape) instead of a DataFrame. When the driver plan
@@ -911,13 +894,11 @@ def wand_topk(
             return []
         return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
 
-    use_driver = skip_cache and all(
-        meta[t][2] <= SKIP_CACHE_MAX_BLOCKS for t in present
-    )
+    use_driver = all(meta[t][2] <= SKIP_CACHE_MAX_BLOCKS for t in present)
     # fq filters: an AttrFilter is served DRIVER-SIDE (candidates/θ
     # masked against the doc_attrs sidecar, zero extra Spark jobs) when
     # the driver plan runs on a pyarrow-readable store with the sidecar
-    # present; every other route lowers it to the legacy DataFrame form
+    # present; every other route lowers it to the DataFrame form
     # (identical clauses — both go through filter_documents).
     from nexlt_spark.query.attrs import AttrFilter, has_attrs, to_doc_filter_df
 
@@ -934,16 +915,13 @@ def wand_topk(
             doc_filter = None  # the driver flow applies the filter itself
     # Fused one-job plan (r4): on a uniformly RANGED store, when the query
     # would otherwise run cluster-side Spark jobs — payloads not driver-
-    # readable (in-memory store: every driver-flow step is a collect job),
-    # terms past the skip-data cap, or skip_cache=False — run the whole
-    # WAND (local θ probe → MaxScore split → kept-block candidates →
-    # exact rescore → local top-k) inside ONE applyInPandas pass per doc
-    # range. Replaces the legacy candidate-collect → rescore → merge
-    # multi-job flow (its ~1.4-1.5 s orchestration floor, VERDICT r3 #2).
+    # readable (in-memory store: every driver-flow step is a collect job)
+    # or terms past the skip-data cap — run the whole WAND (local θ probe
+    # → MaxScore split → kept-block candidates → exact rescore → local
+    # top-k) inside ONE applyInPandas pass per doc range.
     use_fused = (
         getattr(bidx, "ranged", False)
         and doc_filter is None
-        and rescore == "auto"
         and (not use_driver or _pa_ds(bidx) is None)
     )
     if use_fused:
@@ -955,23 +933,23 @@ def wand_topk(
             bidx, spark, meta, present, k, mode, stats_out, boosts
         )
         return _df_rows(out) if as_rows else out
+    if not use_driver:
+        # over-cap terms the fused kernel cannot take: the exact plan
+        if stats_out is not None:
+            stats_out.update(plan="spark", spark_plan="exact", fallback=True)
+        out = _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
+        return _df_rows(out) if as_rows else out
     if stats_out is not None:
-        stats_out["plan"] = "driver" if use_driver else "spark"
+        stats_out["plan"] = "driver"
         if attr_f is not None:
             stats_out["attr_filtered"] = True
-    if use_driver:
-        out = _wand_topk_driver(
-            bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-            slice_shift, stats_out, rescore, boosts, as_rows, attr_f,
-        )
-        if as_rows:
-            return out if isinstance(out, list) else _df_rows(out)
-        return out
-    out = _wand_topk_spark(
+    out = _wand_topk_driver(
         bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-        slice_shift, stats_out, rescore, boosts,
+        stats_out, boosts, as_rows, attr_f,
     )
-    return _df_rows(out) if as_rows else out
+    if as_rows:
+        return out if isinstance(out, list) else _df_rows(out)
+    return out
 
 
 def _df_rows(df: DataFrame) -> list:
@@ -994,7 +972,7 @@ def _exact_fallback(bidx, present, mode, doc_filter, k, boosts=None) -> DataFram
 
 def _wand_topk_driver(
     bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-    slice_shift, stats_out, rescore, boosts=None, as_rows=False, attr_f=None,
+    stats_out, boosts=None, as_rows=False, attr_f=None,
 ) -> DataFrame:
     """The skip-data plan: pruning decisions on driver-resident block
     metadata, Spark jobs only over key-selected blocks (module docstring,
@@ -1163,9 +1141,7 @@ def _wand_topk_driver(
             return [] if as_rows else spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
 
     # ---- rescore: exact per-block intersection against candidates ----
-    shift = (
-        _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-    )
+    shift = _adaptive_slice_shift(n, cand_ids.size)
     rescore_keys = {}
     hit_postings = 0
     for t in present:
@@ -1175,7 +1151,12 @@ def _wand_topk_driver(
     total_postings = sum(dfs.values())
     covered = hit_postings / total_postings if total_postings else 1.0
 
-    use_local = rescore == "auto" and _fits(rescore_keys, hit_postings)
+    if _fits(rescore_keys, hit_postings):
+        rescore_plan = "local"
+    elif getattr(bidx, "ranged", False) and covered >= ROWS_RESCORE_COVERAGE:
+        rescore_plan = "ranged"
+    else:
+        rescore_plan = "rows"
     if stats_out is not None:
         stats_out.update(
             fallback=False,
@@ -1186,12 +1167,12 @@ def _wand_topk_driver(
             rescore_blocks=int(sum(v.size for v in rescore_keys.values())),
             slice_shift=shift,
             covered=round(covered, 4),
-            rescore_plan="local" if use_local else rescore,
+            rescore_plan=rescore_plan,
         )
         if mode == "or":
             stats_out["n_essential"] = len(essential)
 
-    if use_local:
+    if rescore_plan == "local":
         # the whole rescore fits the driver caps: one shuffle-free scan
         # collects the intersecting blocks' payloads, numpy masks to the
         # candidates and folds (bit-identical to the Column fold)
@@ -1209,8 +1190,8 @@ def _wand_topk_driver(
 
     bc = spark.sparkContext.broadcast(cand_ids)
     scored = _rescore(
-        bidx, blocks_q, present, idfs, avgdl, n_required, bc, shift, covered,
-        rescore, rescore_keys,
+        blocks_q, present, idfs, avgdl, n_required, bc, shift, rescore_plan,
+        rescore_keys,
     )
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
@@ -1373,130 +1354,3 @@ def _wand_topk_ranged_fused(
     )
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
-
-def _wand_topk_spark(
-    bidx, spark, meta, present, k, mode, doc_filter, candidate_cap,
-    slice_shift, stats_out, rescore, boosts=None,
-) -> DataFrame:
-    """Legacy cluster-side pruning flow — block selection and candidate
-    discovery as Spark filters/sorts. Serves queries whose terms exceed
-    the driver skip-data cap (10^10+-doc head terms) and skip_cache=False
-    callers; pays an extra metadata sort job (OR probe keys) and JVM
-    slice prefilters the driver plan avoids."""
-    n, avgdl = bidx.stats.n_docs, bidx.stats.avgdl
-    dfs = {t: meta[t][0] for t in present}
-    idfs = {t: idf(n, dfs[t]) for t in present}
-    if boosts:
-        idfs = {t: v * boosts.get(t, 1.0) for t, v in idfs.items()}
-    blocks_q = _query_blocks(bidx, present, idfs)
-    n_required = len(present) if mode == "and" else None
-
-    if mode == "and":
-        # rarest-term-driven conjunction: candidates = smallest list.
-        rare = min(present, key=lambda t: dfs[t])
-        cand_rows = _decode_filtered(blocks_q.where(F.col("term") == rare))
-        cand_df = cand_rows.select("doc_id")
-        if doc_filter is not None:
-            cand_df = cand_df.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-        cand = cand_df.limit(candidate_cap + 1).collect()
-        if len(cand) > candidate_cap:
-            if stats_out is not None:
-                stats_out["fallback"] = True
-            return _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
-        cand_ids = np.sort(np.array([r["doc_id"] for r in cand], dtype=np.int64))
-        if cand_ids.size == 0:
-            return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
-        shift = (
-            _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-        )
-        covered = _est_covered_fraction(n, cand_ids.size, shift)
-        bc = spark.sparkContext.broadcast(cand_ids)
-        scored = _rescore(
-            bidx, blocks_q, present, idfs, avgdl, n_required, bc, shift, covered,
-            rescore,
-        )
-        if stats_out is not None:
-            stats_out.update(
-                fallback=False, n_candidates=int(cand_ids.size), theta=None,
-                slice_shift=shift, covered=round(covered, 4),
-            )
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-    # ---- OR mode: θ probe → block pruning → candidates → rescore ----
-    # gm comes free from the cached term metadata (no extra Spark job)
-    gm = {t: idfs[t] * meta[t][1] for t in present}
-    sum_gm = sum(gm.values())
-
-    # θ-probe block selection runs on SKINNY metadata (term, first_doc_id,
-    # ub) — a direct orderBy(ub).limit(n) would drag every block's payload
-    # byte columns through the sort exchange (measured: 13 s on a 120k-block
-    # head list vs ~0.3 s skinny). The collected keys then filter blocks_q
-    # per term; a key collision across salted blocks only decodes a few
-    # extra blocks, which can only RAISE θ (partials stay lower bounds).
-    n_probe = PROBE_BLOCKS_PER_TERM * len(present)
-    probe_keys = (
-        blocks_q.select("term", "first_doc_id", "ub")
-        .orderBy(F.col("ub").desc())
-        .limit(n_probe)
-        .collect()
-    )
-    by_term: dict = {}
-    for r in probe_keys:
-        by_term.setdefault(r["term"], []).append(r["first_doc_id"])
-    probe_cond = None
-    for t, firsts in by_term.items():
-        c = (F.col("term") == t) & F.col("first_doc_id").isin(firsts)
-        probe_cond = c if probe_cond is None else (probe_cond | c)
-    probe_blocks = blocks_q.where(probe_cond) if probe_cond is not None else blocks_q.limit(0)
-    probe_rows = _decode_filtered(probe_blocks)
-    if doc_filter is not None:
-        probe_rows = probe_rows.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    partial = fold_scores(probe_rows, idfs, avgdl, None)
-    topk_partial = partial.orderBy(F.col("score").desc()).limit(k).collect()
-    theta = topk_partial[-1]["score"] if len(topk_partial) >= k else 0.0
-
-    # MaxScore essential-list split — same shared helper as the driver
-    # flow and the planner; here the split feeds a cluster-side filter.
-    non_essential = maxscore_split(present, gm, theta)
-    essential = [t for t in present if t not in non_essential]
-
-    # keep b(t) iff ub_b + Σ_{t'≠t} gm_{t'} ≥ θ  ⇔  ub_b ≥ θ - (sum_gm - gm_t)
-    gm_col = F.create_map(*[x for t in present for x in (F.lit(t), F.lit(gm[t]))])[
-        F.col("term")
-    ]
-    kept = blocks_q.where(
-        F.col("term").isin(essential)
-        & (F.col("ub") >= F.lit(theta) - (F.lit(sum_gm) - gm_col))
-    )
-
-    cand_df = _decode_filtered(kept).select("doc_id").distinct()
-    if doc_filter is not None:
-        cand_df = cand_df.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    cand = cand_df.limit(candidate_cap + 1).collect()
-    if len(cand) > candidate_cap:
-        if stats_out is not None:
-            stats_out["fallback"] = True
-        return _exact_fallback(bidx, present, mode, doc_filter, k, boosts)
-    cand_ids = np.sort(np.array([r["doc_id"] for r in cand], dtype=np.int64))
-    if cand_ids.size == 0:
-        return spark.createDataFrame([], EMPTY_SCORED_SCHEMA)
-    shift = _adaptive_slice_shift(n, cand_ids.size) if slice_shift is None else slice_shift
-    covered = _est_covered_fraction(n, cand_ids.size, shift)
-
-    if stats_out is not None:
-        stats_out.update(
-            fallback=False,
-            theta=float(theta),
-            n_candidates=int(cand_ids.size),
-            blocks_total=blocks_q.count(),
-            blocks_kept=kept.count(),
-            slice_shift=shift,
-            n_essential=len(essential),
-            covered=round(covered, 4),
-        )
-
-    bc = spark.sparkContext.broadcast(cand_ids)
-    scored = _rescore(
-        bidx, blocks_q, present, idfs, avgdl, None, bc, shift, covered, rescore
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)

@@ -281,15 +281,20 @@ def test_slop_ranged_end_to_end(mini, documents, oracle, pos_index):
             assert math.isclose(gs, ws, rel_tol=1e-12, abs_tol=1e-15)
 
 
-def test_boost_wand_identical_to_exact(documents, oracle):
-    # boosted WAND (driver skip-data AND legacy cluster-side) must stay
-    # rank- and score-identical to the boosted exact fold: every upper
-    # bound is idf*max_tfnorm, so the single idf multiply keeps the
-    # bounds admissible
-    from nexlt_spark.index.packed import build_blocked_direct
+def test_boost_wand_identical_to_exact(documents, oracle, tmp_path):
+    # boosted WAND (fused cluster kernel AND driver skip-data plan) must
+    # stay rank- and score-identical to the boosted exact fold: every
+    # upper bound is idf*max_tfnorm, so the single idf multiply keeps the
+    # bounds admissible. The in-memory ranged index takes the fused
+    # kernel; its on-disk copy takes the driver plan.
+    from nexlt_spark.index.blocks import load_blocked_index
+    from nexlt_spark.index.packed import build_blocked_direct, save_blocked
     from nexlt_spark.query.wand import wand_topk
 
     ridx = build_blocked_direct(documents, range_shift=8).persist()
+    save_blocked(ridx, str(tmp_path / "store"), n_buckets=8)
+    sidx = load_blocked_index(documents.sparkSession, str(tmp_path / "store"))
+    stores = [(ridx, ("spark", "fused")), (sidx, ("driver", None))]
     cases = [
         (["spark", "join"], "or", {"join": 50.0}),
         (["spark", "join"], "or", {"spark": 0.1}),
@@ -297,15 +302,16 @@ def test_boost_wand_identical_to_exact(documents, oracle):
     ]
     for terms, mode, boosts in cases:
         want = oracle.topk(Query(terms=terms, mode=mode, boosts=boosts, k=10))
-        for skip_cache in (True, False):
+        for bidx, plan in stores:
+            stats = {}
             got = [
                 (r["doc_id"], r["score"])
                 for r in wand_topk(
-                    ridx, terms, k=10, mode=mode, boosts=boosts,
-                    skip_cache=skip_cache,
+                    bidx, terms, k=10, mode=mode, boosts=boosts, stats_out=stats,
                 ).collect()
             ]
-            assert [d for d, _ in got] == [d for d, _ in want], (terms, mode, skip_cache)
+            assert (stats["plan"], stats.get("spark_plan")) == plan, (terms, mode, stats)
+            assert [d for d, _ in got] == [d for d, _ in want], (terms, mode, plan)
             for (gd, gs), (wd, ws) in zip(got, want):
                 assert math.isclose(gs, ws, rel_tol=1e-12, abs_tol=1e-15)
 

@@ -5,9 +5,10 @@ are rank-identical — and must decide from cached metadata without
 scanning postings. The crossover bench (tools/bench_wand_crossover.py,
 BENCH.md §6) showed exact wins EVERY shape at 10^6-doc scale (WAND's
 multi-job floor > the whole exact runtime), so at test-corpus scale the
-planner must always say "exact"; the WAND branch is exercised through
-synthetic cached metadata at 10^8-10^9-posting scale, where skipping
-decode volume pays for the orchestration.
+planner must always say "exact"; the fused-route rule (saved postings
+> one probe's volume) is exercised through synthetic cached metadata at
+10^8-10^9-posting scale on a ranged stand-in, and a non-ranged stand-in
+off the driver plan must always say "exact".
 """
 
 from types import SimpleNamespace
@@ -15,15 +16,16 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
+from nexlt_spark.index.blocks import BLOCK_SIZE
 from nexlt_spark.index.packed import build_blocked_direct
 from nexlt_spark.query.exact import paginate, score_postings
 from nexlt_spark.query.planner import (
-    BREAK_EVEN_POSTINGS,
     choose_topk_path,
     estimate_kept_fraction,
     estimate_postings_saved,
     topk,
 )
+from nexlt_spark.query.wand import PROBE_BLOCKS_PER_TERM
 
 
 @pytest.fixture(scope="module")
@@ -34,10 +36,43 @@ def ranged(documents):
     return b
 
 
-def _fake_index(n_docs, meta):
-    """Planner-visible index stand-in: prefilled TermStates cache + stats.
-    choose_topk_path reads nothing else, so no Spark is involved."""
-    return SimpleNamespace(stats=SimpleNamespace(n_docs=n_docs), _term_meta_cache=dict(meta))
+def _fake_index(n_docs, meta, ranged):
+    """Planner-visible index stand-in: prefilled TermStates cache, stats
+    and the store's ranged flag. No store path, so the driver plan is out
+    of reach; choose_topk_path reads nothing else, so no Spark is
+    involved."""
+    return SimpleNamespace(
+        stats=SimpleNamespace(n_docs=n_docs), _term_meta_cache=dict(meta), ranged=ranged
+    )
+
+
+# synthetic cached metadata at 10^8-10^9-posting scale:
+# (df, max_tfnorm, n_blocks, block-ub quantile sketch) per term
+# two comparable-idf terms, 300M postings total, block-ub sketch says
+# ~90% of blocks fall below the θ̂ cut
+META_OR_SCALE = {
+    "hot": (200_000_000, 1.0, 1_500_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
+    "warm": (100_000_000, 1.0, 800_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
+}
+# a 1k-doc rare list against a 500M-posting hot list
+META_AND_RARE = {
+    "rare": (1_000, 1.0, 8, (0.4, 0.5, 0.6, 0.7, 0.8, 0.9)),
+    "hot": (500_000_000, 1.0, 4_000_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
+}
+# the rarest list is larger than the candidate cap
+META_AND_OVER_CAP = {
+    "big1": (600_000, 1.0, 5_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
+    "big2": (700_000_000, 1.0, 5_500_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
+}
+# equal hot terms with flat block-ub sketches near the max
+META_FLAT_IDF = {
+    "a": (200_000_000, 1.0, 1_500_000, (0.95, 0.96, 0.97, 0.98, 0.99, 1.0)),
+    "b": (210_000_000, 1.0, 1_600_000, (0.95, 0.96, 0.97, 0.98, 0.99, 1.0)),
+}
+
+
+def _probe_cost(n_terms):
+    return PROBE_BLOCKS_PER_TERM * BLOCK_SIZE * n_terms
 
 
 def _exact(index, terms, k, mode="or"):
@@ -78,48 +113,39 @@ def test_or_kept_fraction_estimate_sane(ranged):
 
 
 def test_wand_chosen_at_scale_or():
-    # two comparable-idf terms, 300M postings total, block-ub sketch says
-    # ~90% of blocks fall below the θ̂ cut → saved ≈ 270M ≫ break-even
-    meta = {
-        "hot": (200_000_000, 1.0, 1_500_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
-        "warm": (100_000_000, 1.0, 800_000, (0.28, 0.30, 0.35, 0.40, 0.45, 0.50)),
-    }
-    idx = _fake_index(1_000_000_000, meta)
+    # ~90% of blocks below the θ̂ cut → saved ≈ 270M ≫ one probe's volume,
+    # so the fused kernel on a ranged store wins
+    idx = _fake_index(1_000_000_000, META_OR_SCALE, ranged=True)
     saved = estimate_postings_saved(idx, ["hot", "warm"], "or")
-    assert saved is not None and saved > BREAK_EVEN_POSTINGS
+    assert saved is not None and saved > _probe_cost(2)
     assert choose_topk_path(idx, ["hot", "warm"], 10, "or") == "wand"
 
 
 def test_wand_chosen_at_scale_and_rare_list():
-    # 1k-doc rare list against a 500M-posting hot list: candidate-masked
-    # rescore decodes ≤ rare·terms·block postings — skip ~all of the list
-    meta = {
-        "rare": (1_000, 1.0, 8, (0.4, 0.5, 0.6, 0.7, 0.8, 0.9)),
-        "hot": (500_000_000, 1.0, 4_000_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
-    }
-    idx = _fake_index(1_000_000_000, meta)
+    # candidate-masked rescore decodes ≤ rare·terms·block postings —
+    # skip ~all of the hot list
+    idx = _fake_index(1_000_000_000, META_AND_RARE, ranged=True)
+    saved = estimate_postings_saved(idx, ["rare", "hot"], "and")
+    assert saved is not None and saved > _probe_cost(2)
     assert choose_topk_path(idx, ["rare", "hot"], 10, "and") == "wand"
 
 
 def test_and_over_candidate_cap_goes_exact():
-    # rarest list larger than the candidate cap ⇒ WAND would fall back
-    # anyway; planner must not pay the probe just to fall back
-    meta = {
-        "big1": (600_000, 1.0, 5_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
-        "big2": (700_000_000, 1.0, 5_500_000, (0.15, 0.2, 0.25, 0.3, 0.35, 0.4)),
-    }
-    idx = _fake_index(1_000_000_000, meta)
-    assert choose_topk_path(idx, ["big1", "big2"], 10, "and") == "exact"
+    # off the driver plan, a NON-ranged store has no cluster WAND route
+    # (wand_topk serves it with the exact plan), so every shape — even
+    # ones that prune well or sit past the candidate cap — goes exact
+    for meta in (META_OR_SCALE, META_AND_RARE, META_AND_OVER_CAP, META_FLAT_IDF):
+        idx = _fake_index(1_000_000_000, meta, ranged=False)
+        for mode in ("or", "and"):
+            assert choose_topk_path(idx, sorted(meta), 10, mode) == "exact", (meta, mode)
 
 
 def test_flat_idf_or_stays_exact_even_at_scale():
-    # equal hot terms with flat block-ub sketches near the max: θ̂ keeps
-    # everything → saved ≈ 0 → exact, regardless of volume
-    meta = {
-        "a": (200_000_000, 1.0, 1_500_000, (0.95, 0.96, 0.97, 0.98, 0.99, 1.0)),
-        "b": (210_000_000, 1.0, 1_600_000, (0.95, 0.96, 0.97, 0.98, 0.99, 1.0)),
-    }
-    idx = _fake_index(1_000_000_000, meta)
+    # flat block-ub sketches near the max: θ̂ keeps everything → saved ≈ 0
+    # → exact even on the fused route, regardless of volume
+    idx = _fake_index(1_000_000_000, META_FLAT_IDF, ranged=True)
+    saved = estimate_postings_saved(idx, ["a", "b"], "or")
+    assert saved is not None and saved <= _probe_cost(2)
     assert choose_topk_path(idx, ["a", "b"], 10, "or") == "exact"
 
 

@@ -105,13 +105,44 @@ def test_wand_actually_prunes(blocked_salted):
     (["spark", "index", "merge"], "or", 10),
     (["the", "error"], "or", 25),
 ])
-def test_wand_rows_rescore_equals_exact(index, blocked_salted, terms, mode, k):
-    """The shuffle-free rows rescore (sparse-candidate plan at scale,
-    forced here) is rank- and score-identical to the ranged kernel and
-    the exact path."""
-    assert _wand(blocked_salted, terms, k, mode, rescore="rows") == _exact_topk(
-        index, terms, k, mode
-    )
+def test_wand_rows_rescore_equals_exact(index, blocked_salted, terms, mode, k, monkeypatch):
+    """The shuffle-free rows rescore (the cluster rescore of a non-ranged
+    store, reached here by zeroing the driver-decode block cap) is rank-
+    and score-identical to the exact path."""
+    import nexlt_spark.query.wand as W
+
+    monkeypatch.setattr(W, "DRIVER_DECODE_MAX_BLOCKS", 0)
+    stats = {}
+    got = _wand(blocked_salted, terms, k, mode, stats_out=stats)
+    assert stats["plan"] == "driver" and stats["rescore_plan"] == "rows", stats
+    assert got == _exact_topk(index, terms, k, mode)
+
+
+def test_wand_ranged_masked_rescore_equals_exact(spark, index, documents, tmp_path_factory, monkeypatch):
+    """The candidate-masked per-range rescore (query.ranged.
+    score_ranged_masked: the cluster rescore of dense candidates on a
+    ranged store) is rank- and score-identical to the exact path. Zeroed
+    decode caps keep every step off the driver; a zero coverage threshold
+    makes every candidate set dense."""
+    import nexlt_spark.query.wand as W
+    from nexlt_spark.index.blocks import load_blocked_index
+    from nexlt_spark.index.packed import build_blocked_direct, save_blocked
+
+    path = str(tmp_path_factory.mktemp("wand_ranged_rescore") / "idx")
+    save_blocked(build_blocked_direct(documents, range_shift=6), path, n_buckets=8)
+    bidx = load_blocked_index(spark, path)
+    monkeypatch.setattr(W, "DRIVER_DECODE_MAX_BLOCKS", 0)
+    monkeypatch.setattr(W, "DRIVER_DECODE_MAX_POSTINGS", 0)
+    monkeypatch.setattr(W, "ROWS_RESCORE_COVERAGE", 0.0)
+    for terms, mode, k in [
+        (["run", "file"], "and", 10),
+        (["spark", "index", "merge"], "or", 10),
+        (["the", "error"], "or", 25),
+    ]:
+        stats = {}
+        got = _wand(bidx, terms, k, mode, stats_out=stats)
+        assert stats["plan"] == "driver" and stats["rescore_plan"] == "ranged", stats
+        assert got == _exact_topk(index, terms, k, mode), (terms, mode)
 
 
 def test_wand_maxscore_essential_split(index, blocked_salted):
@@ -150,12 +181,16 @@ def test_bucket_parity_spark_vs_python(spark, index):
     (["the", "error"], "or", 25),
     (["spark", "index", "merge"], "or", 10),
 ])
-def test_wand_spark_plan_equals_exact(index, blocked_salted, terms, mode, k):
-    """The legacy cluster-side pruning flow (what over-cap head terms at
-    10^10+ docs route through) stays rank-identical when forced."""
+def test_wand_spark_plan_equals_exact(index, blocked_salted, terms, mode, k, monkeypatch):
+    """Terms past the skip-data cap (the 10^10+-doc head-term case) on a
+    NON-ranged store have no WAND route: wand_topk serves them with the
+    exact plan, rank-identical by construction."""
+    import nexlt_spark.query.wand as W
+
+    monkeypatch.setattr(W, "SKIP_CACHE_MAX_BLOCKS", 0)
     stats = {}
-    got = _wand(blocked_salted, terms, k, mode, stats_out=stats, skip_cache=False)
-    assert stats["plan"] == "spark"
+    got = _wand(blocked_salted, terms, k, mode, stats_out=stats)
+    assert stats["plan"] == "spark" and stats["spark_plan"] == "exact", stats
     assert got == _exact_topk(index, terms, k, mode)
 
 
@@ -234,6 +269,56 @@ def test_pa_ds_remote_store_uri_falls_back_to_cluster():
     assert _pa_ds(SimpleNamespace(store_path="s3a://bucket/store")) is None
     assert _pa_ds(SimpleNamespace(store_path="hdfs://nn:8020/store")) is None
     assert _pa_ds(SimpleNamespace(store_path=None)) is None
+
+
+def test_term_meta_caches_created_once_under_concurrency(spark, index, tmp_path_factory):
+    """Eight searcher threads make the first term-metadata lookup on a
+    fresh index at the same instant, each with its own out-of-vocabulary
+    terms. They must all share ONE positive cache and ONE negative FIFO:
+    a thread holding a private FIFO (or lock) loses its negatives once
+    another thread's attribute write lands last."""
+    import dataclasses
+    import sys
+    import threading
+
+    import nexlt_spark.query.wand as W
+    from nexlt_spark.index.blocks import load_blocked_index, save_blocked_index
+
+    path = str(tmp_path_factory.mktemp("meta_race") / "idx")
+    save_blocked_index(index, path, n_buckets=8)
+    base = load_blocked_index(spark, path)
+    n_threads, per_thread = 8, 4
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # hand the GIL over as often as possible
+    try:
+        for rnd in range(10):
+            bidx = dataclasses.replace(base)  # no lazily-attached caches
+            barrier = threading.Barrier(n_threads, timeout=60)
+            oov = [
+                [f"zzoov{rnd}t{i}n{j}" for j in range(per_thread)]
+                for i in range(n_threads)
+            ]
+            errors = []
+
+            def lookup(terms):
+                try:
+                    barrier.wait()
+                    assert W._term_meta(bidx, terms) == {}
+                except Exception as e:  # surfaced below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=lookup, args=(t,)) for t in oov]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads), rnd
+            assert not errors, errors
+            want = {t for terms in oov for t in terms}
+            assert set(bidx._term_meta_negs) == want, rnd
+            assert all(bidx._term_meta_cache.get(t, W._MISS) is None for t in want), rnd
+    finally:
+        sys.setswitchinterval(interval)
 
 
 @pytest.fixture(scope="module")

@@ -141,7 +141,7 @@ def main() -> None:
             stats: dict = {}
 
             def run_wand_telemetry():
-                # warm-only: stats_out adds 2 block-metadata count jobs
+                # warm-only pass that fills the pruning telemetry
                 wand_topk(bidx, terms, k=10, mode=mode, stats_out=stats).collect()
 
             def run_wand():

@@ -59,15 +59,15 @@ per-range top-(start+k) truncation preserves the global order only up
 to the first page, so deep cursor pages must see every scored row.
 Also asserted in `tests/test_cursor.py::test_cursor_page_plan_is_take_ordered`.""",
     "WAND default plan: driver skip-data, zero cluster-side pruning": """\
-`wand_topk`'s default (`skip_cache=True`) serves from driver-resident
-skip data whenever every present term's block count fits the cache cap:
+`wand_topk` serves an on-disk store from driver-resident skip data
+whenever every present term's block count fits the cache cap:
 block selection, θ maintenance, and pruning are driver-side numpy; the
 only Spark jobs read key-selected block rows. The RESULT DataFrame is
 therefore a `LocalTableScan` — the scores are already resident, and a
 serving node answers follow-up pages without any further cluster work
-(BENCH.md §2's QPS table measures this route at p50 ≈ 85 ms). The cluster-side flow
-below stays available for over-cap terms and is what a 10^12-doc head
-term would route through.""",
+(BENCH.md §2's QPS table measures this route at p50 ≈ 85 ms). The fused
+cluster kernel below serves in-memory ranged stores and over-cap terms
+— what a 10^12-doc head term would route through.""",
     "Training-data quality ops: repetition signals, boilerplate strip, contamination": """\
 Audited live on the documents table (AQE on — join strategies that are
 size-based at this scale are called out as such):
@@ -331,12 +331,17 @@ def main() -> None:
         )
     )
 
-    # skip_cache=False forces the cluster-side flow (what an over-cap
-    # head term routes through at 10^12 docs)
-    q10 = wand_topk(bidx, ["spark", "join"], k=10, mode="or", skip_cache=False)
+    # an in-memory ranged index has no driver-readable payloads, so its
+    # default WAND route is the fused cluster kernel (what an over-cap
+    # head term routes through at 10^12 docs). localCheckpoint keeps the
+    # blocks in executor memory and cuts the build's own stages out of
+    # the plan, so the asserts see only the query.
+    ridx = build_blocked_direct(docs, range_shift=8)
+    ridx.blocks = ridx.blocks.localCheckpoint()
+    q10 = wand_topk(ridx, ["spark", "join"], k=10, mode="or")
     sections.append(
         (
-            "WAND rescore on the ranged store (candidate-masked kernel, dense candidates)",
+            "WAND cluster plan: fused per-range kernel (in-memory ranged store)",
             plan_text(q10),
             ["FlatMapGroupsInPandas", "TakeOrderedAndProject"],
             ["MapInPandas", "ArrowEvalPython", "SortMergeJoin"],
@@ -345,11 +350,23 @@ def main() -> None:
 
     # sparse candidates (the 10^7+-doc WAND design case): the rescore's
     # rows plan decodes+masks in place on the scan — NO groupBy exchange
-    # of block payloads; only masked posting rows reach the fold. Forced
-    # here with rescore="rows" (the small plan corpus makes every slice
-    # coverage look dense otherwise); at scale the auto rule picks this
-    # plan whenever candidate slices cover <30% of the docID space.
-    q10b = wand_topk(bidx, ["table", "scan"], k=10, mode="and", rescore="rows")
+    # of block payloads; only masked posting rows reach the fold. The
+    # small plan corpus fits the driver-decode caps and its candidates
+    # look dense, so the caps drop to 0 and the coverage threshold rises
+    # past 1 for this one query; at scale the driver plan picks this
+    # rescore whenever it overflows the caps and the candidate-hit blocks
+    # hold <30% of the query terms' postings.
+    import nexlt_spark.query.wand as W
+
+    saved = (W.DRIVER_DECODE_MAX_BLOCKS, W.DRIVER_DECODE_MAX_POSTINGS,
+             W.ROWS_RESCORE_COVERAGE)
+    try:
+        W.DRIVER_DECODE_MAX_BLOCKS = W.DRIVER_DECODE_MAX_POSTINGS = 0
+        W.ROWS_RESCORE_COVERAGE = 2.0
+        q10b = wand_topk(bidx, ["table", "scan"], k=10, mode="and")
+    finally:
+        (W.DRIVER_DECODE_MAX_BLOCKS, W.DRIVER_DECODE_MAX_POSTINGS,
+         W.ROWS_RESCORE_COVERAGE) = saved
     sections.append(
         (
             "WAND rescore, sparse candidates: shuffle-free rows plan (no payload exchange)",
